@@ -3,6 +3,7 @@ the timed operation loop, failure accounting and the result line."""
 
 from __future__ import annotations
 
+import gc
 import os
 import subprocess
 import sys
@@ -14,8 +15,6 @@ from dataclasses import dataclass, field
 from stats import p50, tail, vm_hwm_mb
 from spans import Tracer
 
-#: session set-ups per run; setup_s is their median
-SETUPS = 3
 #: end-to-end metric -> unit; every workload reports all of them
 E2E_UNITS = {
     "setup_s": "s",
@@ -46,14 +45,14 @@ class Ops:
         return self.failed / self.attempted if self.attempted else 1.0
 
 
-def timed_loop(seconds: float, round_: Callable[[int], int], ops: Ops) -> None:
+def timed_loop(seconds: float, round_: Callable[[int], int], ops: Ops, min_rounds: int = 1) -> None:
     """Run ``round_(i)`` for i = 0, 1, ... until ``seconds`` of wall time
-    have passed (the round in flight finishes; at least one runs). A round
-    returns how many operations it attempted; one that raises counts as one
-    attempted, failed operation."""
+    have passed and at least ``min_rounds`` rounds have run (the round in
+    flight finishes). A round returns how many operations it attempted; one
+    that raises counts as one attempted, failed operation."""
     t0 = time.perf_counter()
     i = 0
-    while i == 0 or time.perf_counter() - t0 < seconds:
+    while i < min_rounds or time.perf_counter() - t0 < seconds:
         try:
             ops.attempted += round_(i)
         except Exception as exc:  # one failed operation must not end the run
@@ -75,8 +74,8 @@ class Run:
     work: str  # scratch directory inside the checkout
     spark: object | None = None
     tracer: Tracer | None = None
-    setup_s: list[float] = field(default_factory=list)
-    get_spark_s: list[float] = field(default_factory=list)
+    setup_s: float = 0.0
+    get_spark_s: float = 0.0
     ops: Ops = field(default_factory=Ops)
     e2e: dict[str, tuple[float, str]] = field(default_factory=dict)
     layers: dict[str, tuple[float, str]] = field(default_factory=dict)
@@ -91,36 +90,33 @@ class Run:
             self.tracer.phase = name
 
     def setup(self, prepare: Callable[[object], None] | None = None) -> None:
-        """Start the session ``SETUPS`` times (the first launches the JVM,
-        later ones restart the context in it), each followed by
-        ``prepare(spark)``; the last session stays up."""
+        """Start the session in a fresh JVM, then ``prepare(spark)``: the
+        cold start every daily batch or backfill application pays."""
         from securities_pricing_data_pipeline_spark import session
 
-        for i in range(SETUPS):
-            if self.spark is not None:
-                self.spark.stop()
-                self.spark = None
-            t0 = time.perf_counter()
-            self.spark = session.get_spark()
-            self.get_spark_s.append(time.perf_counter() - t0)
-            if prepare is not None:
-                prepare(self.spark)
-            self.setup_s.append(time.perf_counter() - t0)
-            if self.tracer is not None:
-                self.tracer.resolve_jobs()  # before the context and its tracker stop
-            if i == 0:
-                self.info["first_setup_s"] = self.setup_s[0]
+        t0 = time.perf_counter()
+        self.spark = session.get_spark()
+        self.get_spark_s = time.perf_counter() - t0
+        if prepare is not None:
+            prepare(self.spark)
+        self.setup_s = time.perf_counter() - t0
+        if self.tracer is not None:
+            self.tracer.resolve_jobs()
 
-    def record_e2e(self, op_s: list[float], round_s: list[float], rows_per_s: float) -> None:
-        """The end-to-end metrics every workload reports."""
+    def record_e2e(
+        self, op_s: list[float], round_s: list[float], rows_per_s: float,
+        heap_mb: float | None = None,
+    ) -> None:
+        """The end-to-end metrics every workload reports; ``heap_mb`` is
+        measured now unless the workload measured it earlier."""
         value, pct, n = tail(op_s)
         self.info["op_s.tail"] = {"value": value, "percentile": pct, "samples": n}
         self.info["attempted"] = self.ops.attempted
         self.info["failed_share"] = self.ops.failed_share
         self.info["peak_rss_mb"] = self.peak_rss_mb()
         values = {
-            "setup_s": p50(self.setup_s),
-            "heap_retained_mb": self.heap_retained_mb(),
+            "setup_s": self.setup_s,
+            "heap_retained_mb": self.heap_retained_mb() if heap_mb is None else heap_mb,
             "op_s.p50": p50(op_s),
             "round_s.p50": p50(round_s),
             "rows_per_s": rows_per_s,
@@ -137,7 +133,10 @@ class Run:
         """Driver JVM heap still in use after a full collection: what the
         session keeps (cached tables, broadcast and plan caches). Spark's
         context cleaner frees unreferenced blocks asynchronously after a
-        collection, so this is the median of three collect-and-read steps."""
+        collection, so this is the lowest of three collect-and-read steps.
+        Python is collected first, so that no dropped DataFrame still holds
+        its JVM objects through the gateway."""
+        gc.collect()
         jvm = self.spark.sparkContext._jvm
         rt = jvm.java.lang.Runtime.getRuntime()
         used = []
@@ -145,7 +144,7 @@ class Run:
             jvm.java.lang.System.gc()
             used.append((rt.totalMemory() - rt.freeMemory()) / 2**20)
             time.sleep(0.2)
-        return p50(used)
+        return min(used)
 
     def shutdown(self) -> None:
         """Stop the session, then the JVM, and wait for it to exit."""
@@ -165,9 +164,11 @@ class Run:
             proc.wait()
 
     def result(self) -> dict:
+        """The result line. A run in which no operation completed has no
+        timings; it still reports its attempted and failed counts."""
         metrics = self.layers if self.traced else self.e2e
         return {
-            "correct": self.ops.failed == 0,
+            "correct": self.ops.failed == 0 and bool(metrics),
             "attempted": self.ops.attempted,
             "failed": self.ops.failed,
             "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},

@@ -80,7 +80,7 @@ class Tracer:
         self._lock = threading.Lock()
         self._next_group = 0
         self._patched: list[tuple[object, str, object]] = []
-        self._seen_stages: set[int] = set()
+        self._seen_stages: set[tuple[str, int]] = set()
         self.spans: list[Span] = []
         self.phase = "setup"
 
@@ -141,6 +141,7 @@ class Tracer:
         if sc is None:
             return
         st = sc.statusTracker()
+        app = sc.applicationId  # stage ids restart at 0 in a new context
         for sp in self.spans:
             if sp.resolved or sp.end is None or sp.group is None:
                 continue
@@ -149,12 +150,12 @@ class Tracer:
                 sp.jobs += 1
                 info = st.getJobInfo(job_id)
                 for sid in info.stageIds if info is not None else ():
-                    if sid in self._seen_stages:
+                    if (app, sid) in self._seen_stages:
                         continue
                     stage = st.getStageInfo(sid)
                     if stage is None:
                         continue
-                    self._seen_stages.add(sid)
+                    self._seen_stages.add((app, sid))
                     sp.tasks += stage.numCompletedTasks
                     sp.failed_tasks += stage.numFailedTasks
 

@@ -16,7 +16,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import gen  # noqa: E402
-from harness import Ops, timed_loop  # noqa: E402
+from harness import Ops, Run, timed_loop  # noqa: E402
 from spans import Span, Tracer, files_added, list_files, self_time  # noqa: E402
 from stats import tail  # noqa: E402
 
@@ -142,6 +142,62 @@ def test_wrapped_calls_nest_and_restore():
     assert 0 <= self_time(outer) <= outer.duration
     tr.restore()
     assert (Mod.outer, Mod.inner) == originals
+
+
+class _Tracker:
+    """A stand-in for ``SparkContext.statusTracker()``: one job per group,
+    each running stage 0 with three tasks."""
+
+    def getJobIdsForGroup(self, group):
+        return [group]
+
+    def getJobInfo(self, job_id):
+        return type("JobInfo", (), {"stageIds": [0]})()
+
+    def getStageInfo(self, sid):
+        return type("StageInfo", (), {"numCompletedTasks": 3, "numFailedTasks": 0})()
+
+
+class _Context:
+    def __init__(self, app):
+        self.applicationId = app
+        self.props = {}
+
+    def getLocalProperty(self, key):
+        return self.props.get(key)
+
+    def setLocalProperty(self, key, value):
+        self.props[key] = value
+
+    def statusTracker(self):
+        return _Tracker()
+
+
+def test_stage_ids_are_told_apart_across_contexts():
+    ctx = [_Context("app-1")]
+    tr = Tracer(lambda: ctx[0])
+    with tr.span("a"):
+        pass
+    tr.resolve_jobs()
+    ctx[0] = _Context("app-2")  # a new context numbers its stages from 0 again
+    with tr.span("b"):
+        pass
+    with tr.span("c"):
+        pass
+    tr.resolve_jobs()
+    a, b, c = tr.spans
+    assert (a.jobs, a.tasks) == (1, 3) and (b.jobs, b.tasks) == (1, 3)
+    assert (c.jobs, c.tasks) == (1, 0)  # same context as b: the stage is counted once
+
+
+def test_result_line_without_a_completed_operation(tmp_path):
+    run = Run("eod_daily", 1, 0.0, False, str(tmp_path), str(tmp_path))
+
+    def broken(i):
+        raise RuntimeError("injected")
+
+    timed_loop(0.0, broken, run.ops)
+    assert run.result() == {"correct": False, "attempted": 1, "failed": 1, "metrics": {}}
 
 
 @pytest.mark.parametrize(

@@ -10,9 +10,11 @@ operation starts when the previous one has returned.
   ``streaming.ingest.stream_ingest_eod``. Operation = micro-batch,
   round = drain.
 
-A run times rounds from the first one after set-up, in a fresh JVM;
-README.md says why there is no untimed warm-up round. Output checks run outside the timed rounds and
-outside ``setup_s``; a failed check fails the operations it covers.
+Every run starts a fresh JVM. The write workloads time their first round
+after set-up; the dashboard times its passes after an untimed output-check
+pass that also warms it up (README.md says why). Output checks run outside
+the timed rounds and outside ``setup_s``; a failed check fails the
+operations it covers.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ import random
 import sys
 import time
 from collections import defaultdict
-from concurrent.futures import ThreadPoolExecutor
 
 import gen
 from harness import Run, timed_loop
@@ -62,6 +63,7 @@ STREAM_MS = ["addBatch", "queryPlanning", "getBatch", "walCommit"]
 
 DASH_LINES = 30_000  # lineitem rows of the dashboard tables
 DASH_PARTS = 1_000  # symbols of the dashboard tables
+MIN_PASSES = 2  # timed passes per run
 BACKLOG_BATCHES = 2  # micro-batches per drain: new dates, then new dates + a correction
 FILES_PER_TRIGGER = 5
 
@@ -117,7 +119,7 @@ def _subtree_jobs(span) -> int:
 def _finish_layers(run: Run, values: dict[str, float]) -> None:
     """Per-layer metrics: those the workload measured, 0 for layers it does
     not reach; the session and failed-task counters on every workload."""
-    values["session.get_spark_s"] = p50(run.get_spark_s)
+    values["session.get_spark_s"] = run.get_spark_s
     values["spark.failed_tasks"] = sum(s.failed_tasks for s in run.tracer.spans)
     values["process.peak_rss_mb"] = run.info["peak_rss_mb"]
     run.layers = {k: (float(values.get(k, 0.0)), u) for k, u in layer_units().items()}
@@ -180,7 +182,7 @@ def eod_daily(run: Run) -> None:
     run.phase("timed")
     timed_loop(run.seconds, one_date, run.ops)
     if not day_s:
-        raise RuntimeError("no date completed")
+        return  # the result line reports the failed date
     run.info["dates"] = len(day_s)
     run.record_e2e(day_s, day_s, gen.N_ACTIVE * len(day_s) / sum(day_s))
     if run.tracer:
@@ -230,17 +232,35 @@ def dashboard(run: Run) -> None:
         run.tracer.wrap(serving, "bars_silver", "queries.bars.bars_silver")
         for tile, fn in TILES.items():
             run.tracer.wrap(serving, fn, f"queries.serving.{tile}")
-    # The DuckDB side of the output check needs no Spark, so it runs while
-    # the first set-up launches the JVM; it is done long before the two
-    # later set-ups setup_s takes its median from.
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        oracles = pool.submit(lambda: {t: normalize(duck_run(sf, ORACLES[t])) for t in TILES})
-        # the serving silver is built at set-up: the working set every tile reads
-        run.setup(lambda spark: bars.bars_silver(spark, sf))
-        expected = oracles.result()
+    t0 = time.perf_counter()
+    expected = {t: normalize(duck_run(sf, ORACLES[t])) for t in TILES}
+    run.info["oracle_s"] = time.perf_counter() - t0
+    # the serving silver is built at set-up: the working set every tile reads
+    run.setup(lambda spark: bars.bars_silver(spark, sf))
+
+    # Output check, untimed: every tile against its DuckDB oracle, and
+    # folded once. It is also the warm-up pass, so the timed passes measure
+    # a refresh of a dashboard that has been served before.
+    run.phase("check")
+    t0 = time.perf_counter()
+    hashes: dict[str, set] = defaultdict(set)
+    rows, wrong = {}, []
+    for tile, fn in TILES.items():
+        df = getattr(serving, fn)(run.spark, sf)
+        got = normalize(df.toPandas())
+        hashes[tile].add(_fold(df))
+        rows[tile] = len(got[1])
+        if got != expected[tile]:
+            wrong.append(tile)
+    if run.tracer:
+        run.tracer.resolve_jobs()
+    run.info["check_s"] = time.perf_counter() - t0
+    # Heap is read after the fixed-order check pass: a tile with a broadcast
+    # join can leave a 64 MB page held until some later query runs, so after
+    # the seeded timed passes the reading would depend on the tile order.
+    heap_mb = run.heap_retained_mb()
 
     rnd = random.Random(f"{run.seed}:tiles")
-    hashes: dict[str, set] = defaultdict(set)
     tile_s: dict[str, list[float]] = defaultdict(list)
     pass_s: list[float] = []
 
@@ -266,26 +286,19 @@ def dashboard(run: Run) -> None:
         return one_pass(order)
 
     run.phase("timed")
-    timed_loop(run.seconds, shuffled_pass, run.ops)
+    timed_loop(run.seconds, shuffled_pass, run.ops, min_rounds=MIN_PASSES)
     if not pass_s:
-        raise RuntimeError("no pass completed")
-    # every tile against its oracle, and its fold hash once more
-    run.phase("check")
-    rows = {}
-    for tile, fn in TILES.items():
-        df = getattr(serving, fn)(run.spark, sf)
-        got = normalize(df.toPandas())
-        hashes[tile].add(_fold(df))
-        rows[tile] = len(got[1])
-        if got != expected[tile]:
+        return  # the result line reports the failed pass
+    for tile in TILES:
+        if tile in wrong:
             run.ops.fail(f"{tile}: differs from its DuckDB oracle", len(tile_s[tile]))
         elif len(hashes[tile]) != 1:
             run.ops.fail(f"{tile}: fold hash differs across passes", len(tile_s[tile]))
-    run.info["passes"] = len(pass_s)
+    run.info["pass_s"] = pass_s
     run.info["tile_rows"] = rows
     op_s = [x for xs in tile_s.values() for x in xs]
     served = sum(rows[t] * len(tile_s[t]) for t in TILES)
-    run.record_e2e(op_s, pass_s, served / sum(op_s))
+    run.record_e2e(op_s, pass_s, served / sum(op_s), heap_mb)
     if run.tracer:
         v: dict[str, float] = {}
         for tile in TILES:
@@ -353,11 +366,8 @@ def eod_backfill(run: Run) -> None:
         landing = os.path.join(base, "landing")
         return base, gen.land_backlog(run.seed * 1000 + i, landing, BACKLOG_BATCHES, FILES_PER_TRIGGER)
 
-    # the first backlog is written while the first set-up launches the JVM
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        first = pool.submit(land, 0)
-        run.setup()
-        landed = {0: first.result()}
+    landed = {0: land(0)}
+    run.setup()
 
     batch_s: list[float] = []
     drain_s: list[float] = []
@@ -391,7 +401,7 @@ def eod_backfill(run: Run) -> None:
     run.phase("timed")
     timed_loop(run.seconds, one_drain, run.ops)
     if not batch_s:
-        raise RuntimeError("no drain completed")
+        return  # the result line reports the failed drain
     run.info["drains"] = len(drain_s)
     run.record_e2e(batch_s, drain_s, silver_rows / sum(drain_s))
     if run.tracer:
