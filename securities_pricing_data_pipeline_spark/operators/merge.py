@@ -1,14 +1,12 @@
-"""MERGE-family table maintenance behind a pluggable table-format seam
-(SURVEY §2.4 A5/A6/A7).
+"""MERGE-family table maintenance on plain parquet (SURVEY §2.4 A5/A6/A7).
 
 The reference's unit of work is one trading date, so the upsert
 (``MERGE ... WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT``,
 ``4. merge_core.sql:53-96``, ``7. merge_fact_daily_price.sql:23-52``)
-is reproduced exactly by **dynamic partition overwrite** on plain
-parquet: rewrite the affected ``trade_date`` partitions as
-dedup(source ∪ existing-partition). Untouched partitions are never read
-or written — at 100 TB a daily run touches one partition regardless of
-table size.
+is reproduced exactly by **dynamic partition overwrite**: rewrite the
+affected ``trade_date`` partitions as dedup(source ∪ existing-partition).
+Untouched partitions are never read or written — at 100 TB a daily run
+touches one partition regardless of table size.
 
 Insert-only merges (``WHEN NOT MATCHED THEN INSERT`` only — rejects, dims;
 ``4.:24-45``, ``5.:22-37``, ``6.:17-37``) are a left-anti join + append:
@@ -18,52 +16,24 @@ Note (SURVEY A5): the reference header comments promise a guarded UPDATE,
 but the code's ``WHEN MATCHED`` has no guard — updates are unconditional;
 we implement the code's semantics (source wins over target).
 
-**Why the seam exists (the 100 TB escape hatch).** Partition overwrite
-re-reduces |source ∪ touched-partitions| — exactly right when merges
-align with the partition column (the reference's per-date batches), but
-the wrong cost model when keyed updates scatter across partitions: the
-CDC probe (``SCALE_PROBE.md`` cdc_10m) measured 26.2 s to LWW-merge a
-10 M-row batch over 1 M keys this way, where a transactional keyed
-``MERGE INTO`` (Delta/Iceberg) touches only the files holding matched
-keys. ``DeltaMergeFormat`` below is that backend: real ``MERGE INTO``
-code paths, import-gated (same discipline as
-``plans.notify.webhook_notifier``) because this sandbox ships no Delta;
-deployments with ``delta-spark`` on the classpath get file-pruned keyed
-merges by swapping one constructor — every call site goes through the
-``TableFormat`` interface.
+Cost model: a merge re-reduces |source ∪ touched-partitions| — exactly
+right when merges align with ``trade_date`` (the reference's per-date
+batches), but the wrong cost when keyed updates scatter across partitions:
+the CDC probe (``SCALE_PROBE.md`` cdc_10m) measured 26.2 s to LWW-merge a
+10 M-row batch over 1 M keys through ``merge_batch``, where a
+transactional keyed ``MERGE INTO`` (Delta/Iceberg) would touch only the
+files holding matched keys.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _merged_frame(
-    source: DataFrame,
-    existing: DataFrame | None,
-    keys: Sequence[str],
-    prefer_source_order: Sequence[Column] | None,
-) -> DataFrame:
-    """dedup(source ∪ existing) with source rows winning on key collision —
-    the shared LWW reduction both file formats use for the union path."""
-    tagged = source.withColumn("__is_src", F.lit(1))
-    if existing is not None:
-        tagged = tagged.unionByName(existing.withColumn("__is_src", F.lit(0)))
-    order = [F.desc("__is_src")] + list(prefer_source_order or [])
-    return dedup_latest(tagged, list(keys), order).drop("__is_src")
+from securities_pricing_data_pipeline_spark.tables import exists
 
 
 def lww_reduce(
@@ -83,274 +53,62 @@ def lww_reduce(
     ).select(*keys, *[F.col(f"__s.{c}").alias(c) for c in rest])
 
 
-def _newer_condition(order_cols: Sequence[str]) -> str:
-    """Lexicographic 's is strictly newer than t' over ``order_cols`` —
-    the WHEN MATCHED guard a transactional MERGE needs to be
-    re-delivery-safe (an older or duplicate row must never overwrite)."""
-    clauses = []
-    for i, c in enumerate(order_cols):
-        eqs = " AND ".join(f"s.`{p}` = t.`{p}`" for p in order_cols[:i])
-        gt = f"s.`{c}` > t.`{c}`"
-        clauses.append(f"({eqs} AND {gt})" if eqs else f"({gt})")
-    return " OR ".join(clauses)
-
-
-class ParquetPartitionOverwriteFormat:
-    """Default backend: plain parquet + dynamic partition overwrite.
-
-    Correct and file-pruned when the merge unit aligns with the partition
-    column (the reference's one-date-per-run shape); see the module
-    docstring for when to prefer ``DeltaMergeFormat`` instead.
-    """
-
-    name = "parquet"
-
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        return _path_exists(spark, path)
-
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.parquet(path)
-
-    def upsert_partitions(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        path: str,
-        keys: Sequence[str],
-        partition_col: str = "trade_date",
-        prefer_source_order: Sequence[Column] | None = None,
-    ) -> None:
-        source = source.cache()
-        if self.exists(spark, path):
-            existing = self.read(spark, path)
-            # only the partitions being rewritten (partition pruning via the
-            # collected partition-value list — one small distinct, not a join)
-            part_vals = [
-                r[0] for r in source.select(partition_col).distinct().collect()
-            ]
-            existing = existing.filter(F.col(partition_col).isin(part_vals))
-            merged = _merged_frame(source, existing, keys, prefer_source_order)
-        else:
-            merged = _merged_frame(source, None, keys, prefer_source_order)
-        # dynamic partitionOverwriteMode (session.py) → only these partitions move
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        source.unpersist()
-
-    def insert_if_absent(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        path: str,
-        keys: Sequence[str],
-    ) -> int:
-        if self.exists(spark, path):
-            target_keys = self.read(spark, path).select(*keys)
-            new_rows = source.join(target_keys, list(keys), "left_anti")
-        else:
-            new_rows = source
-        # dedup within the batch too (first occurrence wins deterministically)
-        new_rows = dedup_latest(new_rows, list(keys), [F.asc(k) for k in keys]).cache()
-        n = new_rows.count()
-        if n:
-            new_rows.write.mode("append").parquet(path)
-        new_rows.unpersist()
-        return n
-
-    def merge_batch(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        path: str,
-        keys: Sequence[str],
-        order_cols: Sequence[str],
-    ) -> None:
-        """Streaming-CDC apply unit (the foreachBatch sink body): reduce
-        the micro-batch to one winner per key by the ``order_cols`` total
-        order, LWW-merge with the current table, republish atomically.
-        Parquet cost model: |batch keys ∪ table keys| rows re-reduced per
-        batch — state lives in the table, not executor memory; the Delta
-        backend turns this into a guarded keyed MERGE INTO touching only
-        matched files (the cdc_10m probe's escape hatch)."""
-        winners = lww_reduce(batch, keys, order_cols)
-        if self.exists(spark, path):
-            winners = lww_reduce(
-                self.read(spark, path).unionByName(winners), keys, order_cols
-            )
-        # materialize before republishing over the path we just read
-        winners.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-
-
-class DeltaMergeFormat:
-    """Transactional keyed ``MERGE INTO`` backend (Delta Lake).
-
-    Import-gated: constructing it without ``delta-spark`` on the
-    classpath raises immediately with an actionable message — the same
-    discipline as ``plans.notify.webhook_notifier``'s ``requests`` gate.
-    Semantics match the parquet backend bit-for-bit on partition-aligned
-    batches (source wins on key collision; insert-only never updates);
-    the difference is purely the cost model — Delta's MERGE prunes to the
-    files containing matched keys, so keyed updates scattered across
-    partitions stop paying the |batch ∪ touched-partitions| re-reduce.
-
-    NOTE: ``prefer_source_order`` has no Delta equivalent (MERGE sees one
-    source row per key), so the batch is pre-reduced with the same
-    ``dedup_latest`` window before the MERGE — identical keep-rule.
-    """
-
-    name = "delta"
-
-    def __init__(self) -> None:
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except ImportError as exc:  # pragma: no cover - exercised via monkeypatch
-            raise ImportError(
-                "DeltaMergeFormat requires the delta-spark package and a "
-                "SparkSession built with configure_spark_with_delta_pip(); "
-                "use ParquetPartitionOverwriteFormat (the default) in "
-                "environments without Delta."
-            ) from exc
-
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        from delta.tables import DeltaTable
-
-        return bool(DeltaTable.isDeltaTable(spark, path))
-
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.format("delta").load(path)
-
-    def upsert_partitions(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        path: str,
-        keys: Sequence[str],
-        partition_col: str = "trade_date",
-        prefer_source_order: Sequence[Column] | None = None,
-    ) -> None:
-        from delta.tables import DeltaTable
-
-        # one row per key, same keep-rule as the parquet backend
-        batch = dedup_latest(
-            source, list(keys), list(prefer_source_order or [F.asc(k) for k in keys])
-        )
-        if not self.exists(spark, path):
-            batch.write.format("delta").partitionBy(partition_col).save(path)
-            return
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(batch.alias("s"), cond)
-            .whenMatchedUpdateAll()  # unconditional update: reference semantics
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def insert_if_absent(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        path: str,
-        keys: Sequence[str],
-    ) -> int:
-        from delta.tables import DeltaTable
-
-        batch = dedup_latest(source, list(keys), [F.asc(k) for k in keys])
-        if not self.exists(spark, path):
-            batch = batch.cache()
-            n = batch.count()
-            if n:
-                batch.write.format("delta").save(path)
-            batch.unpersist()
-            return n
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        tbl = DeltaTable.forPath(spark, path)
-        (
-            tbl.alias("t")
-            .merge(batch.alias("s"), cond)
-            .whenNotMatchedInsertAll()  # first write wins: no matched clause
-            .execute()
-        )
-        # inserted-row count from the MERGE commit's own operation
-        # metrics — exact for THIS commit even under concurrent writers,
-        # and O(1) vs the O(table) before/after count pair
-        last = tbl.history(1).select("operationMetrics").collect()
-        return int(last[0]["operationMetrics"].get("numTargetRowsInserted", 0))
-
-    def merge_batch(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        path: str,
-        keys: Sequence[str],
-        order_cols: Sequence[str],
-    ) -> None:
-        """Streaming-CDC apply as a transactional keyed MERGE: the batch
-        is pre-reduced to one winner per key (Delta requires it), then
-        MERGE INTO with a GUARDED update — ``whenMatchedUpdateAll`` only
-        when the source row is strictly newer by the ``order_cols``
-        lexicographic order, so replayed or out-of-order micro-batches
-        can never regress a key (the re-delivery safety the parquet
-        backend gets from re-reducing the full union). Touches only the
-        files holding matched keys — the cdc_10m cost-class fix."""
-        from delta.tables import DeltaTable
-
-        winners = lww_reduce(batch, keys, order_cols)
-        if not self.exists(spark, path):
-            winners.write.format("delta").save(path)
-            return
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(winners.alias("s"), cond)
-            .whenMatchedUpdateAll(condition=_newer_condition(order_cols))
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-
-_FORMATS = {
-    ParquetPartitionOverwriteFormat.name: ParquetPartitionOverwriteFormat,
-    DeltaMergeFormat.name: DeltaMergeFormat,
-}
-
-_DEFAULT = ParquetPartitionOverwriteFormat()
-
-
-def get_format(name: str = "parquet"):
-    """Resolve a table-format backend by name (``parquet`` | ``delta``)."""
-    try:
-        return _FORMATS[name]()
-    except KeyError:
-        raise ValueError(
-            f"unknown table format {name!r}; available: {sorted(_FORMATS)}"
-        ) from None
-
-
 def upsert_partitions(
-    spark: SparkSession,
-    source: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    partition_col: str = "trade_date",
-    prefer_source_order: Sequence[Column] | None = None,
+    spark: SparkSession, source: DataFrame, path: str, keys: Sequence[str]
 ) -> None:
-    """A5 upsert on the default (parquet) backend — see the class for docs."""
-    _DEFAULT.upsert_partitions(
-        spark, source, path, keys, partition_col, prefer_source_order
-    )
+    """A5 upsert: rewrite the ``trade_date`` partitions ``source`` touches
+    as dedup(source ∪ existing), source rows winning on key collision."""
+    source = source.cache()
+    tagged = source.withColumn("__is_src", F.lit(1))
+    if exists(spark, path):
+        # only the partitions being rewritten (partition pruning via the
+        # collected partition-value list — one small distinct, not a join)
+        part_vals = [r[0] for r in source.select("trade_date").distinct().collect()]
+        existing = spark.read.parquet(path).filter(F.col("trade_date").isin(part_vals))
+        tagged = tagged.unionByName(existing.withColumn("__is_src", F.lit(0)))
+    merged = dedup_latest(tagged, list(keys), [F.desc("__is_src")]).drop("__is_src")
+    # dynamic partitionOverwriteMode (session.py) → only these partitions move
+    merged.write.mode("overwrite").partitionBy("trade_date").parquet(path)
+    source.unpersist()
 
 
 def insert_if_absent(
+    spark: SparkSession, source: DataFrame, path: str, keys: Sequence[str]
+) -> int:
+    """A6 insert-only merge: append the rows whose key is not in the table
+    yet and return how many there were; no write when there are none."""
+    if exists(spark, path):
+        target_keys = spark.read.parquet(path).select(*keys)
+        new_rows = source.join(target_keys, list(keys), "left_anti")
+    else:
+        new_rows = source
+    # dedup within the batch too (first occurrence wins deterministically)
+    new_rows = dedup_latest(new_rows, list(keys), [F.asc(k) for k in keys]).cache()
+    n = new_rows.count()
+    if n:
+        new_rows.write.mode("append").parquet(path)
+    new_rows.unpersist()
+    return n
+
+
+def merge_batch(
     spark: SparkSession,
-    source: DataFrame,
+    batch: DataFrame,
     path: str,
     keys: Sequence[str],
-) -> int:
-    """A6 insert-only merge on the default (parquet) backend."""
-    return _DEFAULT.insert_if_absent(spark, source, path, keys)
-
-
-# back-compat alias (pre-seam name used by early tests/callers)
-_table_exists = _path_exists
+    order_cols: Sequence[str],
+) -> None:
+    """Streaming-CDC apply unit (the foreachBatch sink body): reduce the
+    micro-batch to one winner per key by the ``order_cols`` total order,
+    LWW-merge with the current table, republish atomically. Cost:
+    |batch keys ∪ table keys| rows re-reduced per batch — state lives in
+    the table, not executor memory. Re-reducing the full union is also
+    what makes a replayed or out-of-order micro-batch unable to regress a
+    key."""
+    winners = lww_reduce(batch, keys, order_cols)
+    if exists(spark, path):
+        winners = lww_reduce(
+            spark.read.parquet(path).unionByName(winners), keys, order_cols
+        )
+    # materialize before republishing over the path we just read
+    winners.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)

@@ -16,12 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from securities_pricing_data_pipeline_spark.operators.merge import _table_exists
+from securities_pricing_data_pipeline_spark.tables import exists
 
 
 def next_id(spark: SparkSession, dim_path: str, id_col: str = "security_id") -> int:
     """A3: COALESCE(MAX(id), 0) + 1 high-water mark."""
-    if not _table_exists(spark, dim_path):
+    if not exists(spark, dim_path):
         return 1
     row = spark.read.parquet(dim_path).agg(F.coalesce(F.max(id_col), F.lit(0))).first()
     return int(row[0]) + 1

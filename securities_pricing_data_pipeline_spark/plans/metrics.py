@@ -16,7 +16,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from securities_pricing_data_pipeline_spark.operators.merge import _table_exists
+from securities_pricing_data_pipeline_spark.tables import exists
 
 
 @dataclass
@@ -56,7 +56,7 @@ def postmerge_counts(
     """A9: CORE vs FACT row counts for the date — partition-pruned scans."""
 
     def count_for(path: str) -> int:
-        if not _table_exists(spark, path):
+        if not exists(spark, path):
             return 0
         return (
             spark.read.parquet(path)

@@ -10,13 +10,15 @@ writes.
 Stage map (reference task → here):
   t01 download            → sources.eod_api (driver fetch / backfill_source)
   t02 verify local file   → sources.csv_source.file_exists_gate
-  t03 upload S3           → write_partitioned to the bronze root (path IS
-                            the date layout: trade_date=YYYY-MM-DD/)
+  t03 upload S3           → folded into s01: bronze is partitioned by
+                            trade_date, so its directories ARE the date
+                            layout (trade_date=YYYY-MM-DD/)
   s01 COPY INTO RAW       → sources.csv_source.read_eod_csv → bronze append
   s02 check loaded        → operators.quality.existence_gate (real assert)
   s03 premerge metrics    → plans.metrics.premerge_metrics
-  s04 merge CORE+REJECT   → normalize → split_rejects → dedup_latest →
-                            upsert_partitions / insert_if_absent
+  s04 merge CORE+REJECT   → silver_frames (normalize → split_rejects →
+                            dedup_latest) → upsert_partitions /
+                            insert_if_absent
   s05 merge DIM_SECURITY  → surrogate_keys.assign_ids + insert_if_absent
   s06 merge DIM_DATE      → date derivations + insert_if_absent
   s07 merge FACT          → broadcast star join + upsert_partitions
@@ -27,6 +29,10 @@ Stage map (reference task → here):
 Idempotency contract (A7): bronze is append-only and may hold duplicates
 (FORCE=TRUE parity); silver/gold writes are per-trade-date idempotent —
 re-running a date leaves every layer byte-identical (tested).
+
+``streaming.ingest.stream_ingest_eod`` reads landing files through the same
+``sources.csv_source`` filter and merges each micro-batch through
+``silver_frames``, so a streamed backfill lands what this batch lands.
 """
 
 from __future__ import annotations
@@ -48,7 +54,6 @@ from securities_pricing_data_pipeline_spark.functions.datetime import (
 from securities_pricing_data_pipeline_spark.functions.normalize import normalize_symbol
 from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest
 from securities_pricing_data_pipeline_spark.operators.merge import (
-    _table_exists,
     insert_if_absent,
     upsert_partitions,
 )
@@ -70,7 +75,9 @@ from securities_pricing_data_pipeline_spark.plans.notify import (
     logging_notifier,
 )
 from securities_pricing_data_pipeline_spark.sources.csv_source import read_eod_csv
-from securities_pricing_data_pipeline_spark.tables import Warehouse
+from securities_pricing_data_pipeline_spark.tables import Warehouse, exists
+
+SILVER_KEYS = ["symbol", "trade_date"]
 
 
 def ingest_bronze(
@@ -85,49 +92,59 @@ def ingest_bronze(
     return loaded
 
 
-def build_silver(
-    spark: SparkSession, wh: Warehouse, trading_date: dt.date
-) -> tuple[int, int, int, int]:
-    """s03+s04: normalize → reject split → dedup → upsert CORE, insert-only
-    REJECT. Returns premerge metrics (raw, rejects, est_ins, est_upd)."""
-    bronze = spark.read.parquet(wh.bronze).filter(F.col("trade_date") == F.lit(trading_date))
+def silver_frames(
+    bronze: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """s04's frames over bronze-shaped rows of any dates: normalize → reject
+    split → dedup, projected to the CORE and REJECT shapes. Returns
+    (valid, rejects, core_rows, reject_rows), all lazy — callers write."""
     normalized = bronze.withColumn("symbol", normalize_symbol(F.col("symbol")))
     valid, rejects = split_rejects(normalized, F.col("volume") >= 0, NEGATIVE_VOLUME)
-
-    silver_keys = None
-    if _table_exists(spark, wh.silver):
-        silver_keys = (
-            spark.read.parquet(wh.silver)
-            .filter(F.col("trade_date") == F.lit(trading_date))
-            .select("symbol", "trade_date")
-        )
-    pre = premerge_metrics(valid, rejects, silver_keys)
-
     # A4 dedup: latest _ingest_ts, tie-break _src_file desc (4.:66-81).
     # The reference's ordering leaves within-file duplicates untotaled
     # (same ts+file) → arbitrary winner; we add a content tie-break so
     # re-runs are deterministic (A7 needs a total order).
     deduped = dedup_latest(
         valid,
-        ["symbol", "trade_date"],
+        SILVER_KEYS,
         [F.desc("_ingest_ts"), F.desc("_src_file")]
         + [F.desc_nulls_last(c) for c in ("volume", "close", "open", "high", "low")],
     )
     core_rows = deduped.select(
         "trade_date", "symbol", "open", "high", "low", "close", "volume"
     ).withColumn("load_ts", F.current_timestamp())
-    # metrics ride the write job itself (Observation accumulators) —
-    # no second scan, unlike the reference's per-metric COUNT statements
-    core_rows, write_obs = observe_write_metrics(core_rows, "silver_write")
-    upsert_partitions(spark, core_rows, wh.silver, keys=["symbol", "trade_date"])
-    logging.getLogger(__name__).info("silver write metrics: %s", write_obs.get)
-
-    # insert-only reject audit (first reject wins, 4.:24-45)
     reject_rows = rejects.select(
         "trade_date", "symbol", "open", "high", "low", "close", "volume",
         "reject_reason", "_src_file", "_ingest_ts",
     )
-    insert_if_absent(spark, reject_rows, wh.reject, keys=["symbol", "trade_date"])
+    return valid, rejects, core_rows, reject_rows
+
+
+def build_silver(
+    spark: SparkSession, wh: Warehouse, trading_date: dt.date
+) -> tuple[int, int, int, int]:
+    """s03+s04: upsert CORE, insert-only REJECT for the date. Returns
+    premerge metrics (raw, rejects, est_ins, est_upd)."""
+    bronze = spark.read.parquet(wh.bronze).filter(F.col("trade_date") == F.lit(trading_date))
+    valid, rejects, core_rows, reject_rows = silver_frames(bronze)
+
+    silver_keys = None
+    if exists(spark, wh.silver):
+        silver_keys = (
+            spark.read.parquet(wh.silver)
+            .filter(F.col("trade_date") == F.lit(trading_date))
+            .select(*SILVER_KEYS)
+        )
+    pre = premerge_metrics(valid, rejects, silver_keys)
+
+    # metrics ride the write job itself (Observation accumulators) —
+    # no second scan, unlike the reference's per-metric COUNT statements
+    core_rows, write_obs = observe_write_metrics(core_rows, "silver_write")
+    upsert_partitions(spark, core_rows, wh.silver, keys=SILVER_KEYS)
+    logging.getLogger(__name__).info("silver write metrics: %s", write_obs.get)
+
+    # insert-only reject audit (first reject wins, 4.:24-45)
+    insert_if_absent(spark, reject_rows, wh.reject, keys=SILVER_KEYS)
     return pre
 
 
@@ -139,7 +156,7 @@ def build_dim_security(spark: SparkSession, wh: Warehouse, trading_date: dt.date
         .select("symbol")
         .distinct()
     )
-    if _table_exists(spark, wh.dim_security):
+    if exists(spark, wh.dim_security):
         existing = spark.read.parquet(wh.dim_security).select("symbol")
         new_symbols = day_symbols.join(existing, "symbol", "left_anti")
     else:

@@ -42,23 +42,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r15 (VERDICT r14 item 1): the r14 session-wide 64k
-        # minPartitionSize floor is REVERTED to Spark's 1m default. The
-        # r15 same-session paired A/B (44 queries × 3 trials per arm,
-        # arm order alternated; table committed in OPTIMIZATION_r15.md)
-        # showed the floor costs 12% net at local[32] — it inflates
-        # post-AQE task counts on every small shuffle in the suite
-        # (stream_dedup_incremental 26.2s@64k vs 13.8s@1m, the langid
-        # family ~0.7x, matching the driver's 8-core-beats-32-core
-        # inversion on untouched queries). The window-family wins the
-        # floor bought in r14 (q24/q18/q19/q28) are kept STRUCTURALLY
-        # instead: the bars silver is persisted hash-partitioned by
-        # symbol (queries/bars.py), so those queries no longer have a
-        # small shuffle to under-coalesce. Env knob kept for A/Bs.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"),
-        )
+        # coalescePartitions.minPartitionSize stays at Spark's 1m default: a
+        # 64k floor cost 12% net across the query suite (OPTIMIZATION_r15.md)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # testdata `events.ts` is parquet TIMESTAMP(NANOS): read as long

@@ -15,6 +15,10 @@ Reproduces ``dags/sql/1. copy_to_raw.sql:15-39``:
   * lineage columns ``_src_file`` (METADATA$FILENAME) and ``_ingest_ts``
     (CURRENT_TIMESTAMP) stamped at read time.
 
+The batch read (``read_eod_csv``) and the landing-directory stream
+(``stream_eod_csv``) share the reader set-up and the row filter, so a
+streamed backfill loads exactly the rows the daily batch does.
+
 Scale note: the corrupt-record pass adds one string column inside the
 scan only — no extra job, no shuffle; the filter is evaluated row-local
 in the same stage, so the 100 TB cost is identical to the plain read.
@@ -46,37 +50,58 @@ def file_exists_gate(path: str) -> None:
         raise FileNotFoundError(f"landing file/dir missing: {path}")
 
 
-def _read_with_corrupt(spark: SparkSession, path: str) -> DataFrame:
+def _eod_csv(spark: SparkSession, reader):
+    """Apply the declared schema, the CSV dialect and the corrupt-record
+    capture to a batch ``spark.read`` or a ``spark.readStream`` alike."""
     # With parser column pruning on, only projected fields are converted, so
     # a cast failure in an unprojected column would neither mark the row
     # corrupt nor drop it — semantics would then depend on the consumer's
     # SELECT list. Whole-row CONTINUE must judge every field, so pin pruning
-    # off (runtime-settable; CSV is only read through this module).
+    # off (runtime-settable; CSV is only read through this module). A stream
+    # clones the session's conf when it starts, so this precedes start().
     spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
     return (
-        spark.read.schema(_READ_SCHEMA)
+        reader.schema(_READ_SCHEMA)
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", _CORRUPT)
         .option("pathGlobFilter", "*.csv*")
         .option("nullValue", "NULL")  # literal 'NULL' → null
         .option("emptyValue", None)  # empty string → null (second NULL_IF sentinel)
-        .csv(path)
+    )
+
+
+def _bronze_rows(raw: DataFrame) -> DataFrame:
+    """Typed rows that parsed whole (ON_ERROR='CONTINUE'), lineage-stamped."""
+    # The always-true symbol clause anchors one data column in the scan's
+    # required schema: a fully-pruned consumer (e.g. ``df.count()``) would
+    # otherwise reference only the corrupt column, which the analyzer
+    # rejects (QUERY_ONLY_CORRUPT_RECORD_COLUMN).
+    keep = F.col(_CORRUPT).isNull() & (F.length(F.coalesce(F.col("symbol"), F.lit(""))) >= 0)
+    return (
+        raw.filter(keep)
+        .drop(_CORRUPT)
+        .withColumn("_src_file", F.input_file_name())
+        .withColumn("_ingest_ts", F.current_timestamp())
     )
 
 
 def read_eod_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read landing CSVs into the bronze shape (typed + lineage), skipping
     whole rows on any conversion failure (ON_ERROR='CONTINUE')."""
-    # The always-true symbol clause anchors one data column in the scan's
-    # required schema: a fully-pruned consumer (e.g. ``df.count()``) would
-    # otherwise reference only the corrupt column, which the analyzer
-    # rejects (QUERY_ONLY_CORRUPT_RECORD_COLUMN).
-    keep = F.col(_CORRUPT).isNull() & (F.length(F.coalesce(F.col("symbol"), F.lit(""))) >= 0)
-    df = _read_with_corrupt(spark, path).filter(keep).drop(_CORRUPT)
-    return df.withColumn("_src_file", F.input_file_name()).withColumn(
-        "_ingest_ts", F.current_timestamp()
-    )
+    return _bronze_rows(_eod_csv(spark, spark.read).csv(path))
+
+
+def stream_eod_csv(
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """``read_eod_csv`` as a file-source stream over a landing directory:
+    the same rows, columns and whole-row skips, one micro-batch at a time.
+    ``max_files_per_trigger`` bounds the files each micro-batch takes."""
+    reader = _eod_csv(spark, spark.readStream)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return _bronze_rows(reader.csv(path))
 
 
 def read_eod_csv_rejects(spark: SparkSession, path: str) -> DataFrame:
@@ -86,7 +111,7 @@ def read_eod_csv_rejects(spark: SparkSession, path: str) -> DataFrame:
     # same pruning anchor as read_eod_csv: a count() over the rejects must
     # not reduce the scan to the corrupt column alone
     bad = F.col(_CORRUPT).isNotNull() & (F.length(F.coalesce(F.col("symbol"), F.lit(""))) >= 0)
-    df = _read_with_corrupt(spark, path).filter(bad)
+    df = _eod_csv(spark, spark.read).csv(path).filter(bad)
     # The projection must reference EVERY data column: the CSV reader only
     # converts requested fields, so a pruned scan would miss cast failures
     # in unrequested ones (and Spark outright refuses corrupt-column-only

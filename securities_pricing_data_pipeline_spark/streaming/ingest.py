@@ -1,10 +1,12 @@
 """Structured Streaming ingestion variant (SURVEY §7 item 8).
 
 The batch pipeline's unit of work is a trading date; the streaming variant
-watches the landing directory and applies the SAME silver merge per
-micro-batch via ``foreachBatch`` — one code path for batch and streaming
-(the foreachBatch frame is just a DataFrame, so operators/plans are reused
-verbatim).
+watches the landing directory and lands each micro-batch through the batch
+load's own pieces: ``sources.csv_source.stream_eod_csv`` applies the same
+schema, dialect, whole-row skip and lineage as ``read_eod_csv``, and
+``plans.pipeline.silver_frames`` builds the same CORE and REJECT rows as
+``build_silver``, for whatever dates the micro-batch holds. A streamed
+backfill therefore lands what the daily batch lands for the same files.
 
 Scale posture: file-source streams scale by listing cost — at production
 volume use a notification-based source; ``maxFilesPerTrigger`` bounds
@@ -17,40 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from securities_pricing_data_pipeline_spark.functions.normalize import normalize_symbol
-from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest
 from securities_pricing_data_pipeline_spark.operators.merge import upsert_partitions
-from securities_pricing_data_pipeline_spark.operators.quality import (
-    NEGATIVE_VOLUME,
-    split_rejects,
-)
-from securities_pricing_data_pipeline_spark.schemas import EOD_CSV_SCHEMA
+from securities_pricing_data_pipeline_spark.plans.pipeline import SILVER_KEYS, silver_frames
+from securities_pricing_data_pipeline_spark.sources.csv_source import stream_eod_csv
 from securities_pricing_data_pipeline_spark.tables import Warehouse
-
-
-def _merge_batch(spark: SparkSession, wh: Warehouse, batch: DataFrame) -> None:
-    """The per-micro-batch silver merge — same semantics as
-    plans.pipeline.build_silver, applied to whatever dates the batch holds."""
-    normalized = batch.withColumn("symbol", normalize_symbol(F.col("symbol")))
-    valid, rejects = split_rejects(normalized, F.col("volume") >= 0, NEGATIVE_VOLUME)
-    deduped = dedup_latest(
-        valid,
-        ["symbol", "trade_date"],
-        [F.desc("_ingest_ts"), F.desc("_src_file")]
-        + [F.desc_nulls_last(c) for c in ("volume", "close", "open", "high", "low")],
-    )
-    core = deduped.select(
-        "trade_date", "symbol", "open", "high", "low", "close", "volume"
-    ).withColumn("load_ts", F.current_timestamp())
-    upsert_partitions(spark, core, wh.silver, keys=["symbol", "trade_date"])
-    reject_rows = rejects.select(
-        "trade_date", "symbol", "open", "high", "low", "close", "volume",
-        "reject_reason", "_src_file", "_ingest_ts",
-    )
-    if reject_rows.limit(1).count():
-        from securities_pricing_data_pipeline_spark.operators.merge import insert_if_absent
-
-        insert_if_absent(spark, reject_rows, wh.reject, keys=["symbol", "trade_date"])
 
 
 def stream_ingest_eod(
@@ -61,32 +33,26 @@ def stream_ingest_eod(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """File-source stream over the landing dir → silver merge per batch.
+    """File-source stream over the landing dir → bronze append, then the
+    silver upsert and insert-only reject merge per micro-batch.
 
     ``available_now=True`` drains the backlog and stops (test/backfill
     mode); otherwise runs continuously.
     """
-    reader = (
-        spark.readStream.schema(EOD_CSV_SCHEMA)
-        .option("header", True)
-        .option("pathGlobFilter", "*.csv*")
-        .option("nullValue", "NULL")
-        .option("emptyValue", None)
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.csv(landing_dir)
-        .withColumn("_src_file", F.input_file_name())
-        .withColumn("_ingest_ts", F.current_timestamp())
-    )
+    stream = stream_eod_csv(spark, landing_dir, max_files_per_trigger)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         if batch.limit(1).count() == 0:
             return
         # bronze append first (FORCE=TRUE parity), then silver merge
         batch.write.mode("append").partitionBy("trade_date").parquet(wh.bronze)
-        _merge_batch(spark, wh, batch)
+        _, _, core_rows, reject_rows = silver_frames(batch)
+        upsert_partitions(spark, core_rows, wh.silver, keys=SILVER_KEYS)
+        # looked up on operators.merge per call, so a wrapper installed on
+        # the module after import (perfbench's tracer) is the one that runs
+        from securities_pricing_data_pipeline_spark.operators.merge import insert_if_absent
+
+        insert_if_absent(spark, reject_rows, wh.reject, keys=SILVER_KEYS)
 
     writer = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
     if available_now:

@@ -46,36 +46,13 @@ class Warehouse:
     def fact_daily_price(self) -> str:
         return os.path.join(self.root, "gold", "fact_daily_price")
 
-    @property
-    def ledger(self) -> str:
-        return os.path.join(self.root, "meta", "ingest_ledger")
 
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        """True if `path` exists as a readable table (any files present)."""
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hadoop_path.getFileSystem(jsc.hadoopConfiguration())
-        return bool(fs.exists(hadoop_path))
-
-    def read(self, spark: SparkSession, path: str, schema=None) -> DataFrame:
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(path)
-
-
-def write_partitioned(df: DataFrame, path: str, partition_col: str = "trade_date", mode: str = "overwrite") -> None:
-    """Write a date-partitioned table. With
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set in session.py),
-    ``mode="overwrite"`` replaces only the partitions present in ``df`` —
-    the engine's idempotent per-trading-date MERGE substitute
-    (reference unit of work: one date per run)."""
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
-
-
-def append(df: DataFrame, path: str) -> None:
-    df.write.mode("append").parquet(path)
+def exists(spark: SparkSession, path: str) -> bool:
+    """True if ``path`` exists on its filesystem (local, HDFS or s3a://)."""
+    jvm = spark.sparkContext._jvm
+    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hadoop_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return bool(fs.exists(hadoop_path))
 
 
 def write_bucketed(

@@ -5,6 +5,8 @@ availableNow/processAllAvailable so they run deterministically in CI."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
 import sys
 
 import pytest
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from securities_pricing_data_pipeline_spark.plans.pipeline import run  # noqa: E402
 from securities_pricing_data_pipeline_spark.streaming.ingest import (  # noqa: E402
     dedup_event_stream,
     join_events_quotes_stream,
@@ -24,29 +27,47 @@ from securities_pricing_data_pipeline_spark.streaming.stateful import (  # noqa:
     sessionize_stream,
 )
 from securities_pricing_data_pipeline_spark.tables import Warehouse  # noqa: E402
-from tests.fixtures import write_eod_csv  # noqa: E402
+from tests.fixtures import write_corrupt_eod_csv, write_eod_csv  # noqa: E402
 
 
 def test_stream_ingest_matches_batch_semantics(spark, tmp_path):
+    """The stream lands what the batch ``run`` lands for the same files,
+    including a file whose damaged rows ON_ERROR='CONTINUE' skips whole:
+    no half-parsed row reaches silver and no null-date partition appears."""
     landing = str(tmp_path / "landing")
     wh = Warehouse(str(tmp_path / "wh"))
-    write_eod_csv(landing, dt.date(2026, 2, 2))
-    write_eod_csv(landing, dt.date(2026, 2, 3))
+    d1, d2, d3 = dt.date(2026, 2, 2), dt.date(2026, 2, 3), dt.date(2026, 2, 4)
+    write_eod_csv(landing, d1)
+    write_corrupt_eod_csv(landing, d1)
+    write_eod_csv(landing, d2)
 
     q = stream_ingest_eod(spark, landing, wh, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     silver = spark.read.parquet(wh.silver)
-    assert silver.count() == 102  # 51 valid keys per date
-    assert silver.select("symbol", "trade_date").distinct().count() == 102
+    assert silver.count() == 104  # 51 valid keys per date + GOOD1, GOOD2
+    assert silver.select("symbol", "trade_date").distinct().count() == 104
     rejects = spark.read.parquet(wh.reject)
     assert rejects.count() == 4  # 2 negative-volume rows per date
 
     # late file arrives → incremental micro-batch upserts only that date
-    write_eod_csv(landing, dt.date(2026, 2, 4))
+    write_eod_csv(landing, d3)
     q2 = stream_ingest_eod(spark, landing, wh, str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
-    assert spark.read.parquet(wh.silver).count() == 153
+    assert spark.read.parquet(wh.silver).count() == 155
+    assert not glob.glob(
+        os.path.join(wh.root, "**", "*__HIVE_DEFAULT_PARTITION__*"), recursive=True
+    )
+
+    batch_wh = Warehouse(str(tmp_path / "batch_wh"))
+    for d in (d1, d2, d3):
+        run(spark, batch_wh, landing, d)
+    core = ["trade_date", "symbol", "open", "high", "low", "close", "volume"]
+    for table, cols in (("silver", core), ("reject", core + ["reject_reason", "_src_file"])):
+        streamed = spark.read.parquet(getattr(wh, table)).select(cols).collect()
+        batched = spark.read.parquet(getattr(batch_wh, table)).select(cols).collect()
+        assert len(streamed) == len(batched)
+        assert set(streamed) == set(batched), table
 
 
 def test_windowed_stream_matches_batch(spark, tmp_path):
